@@ -3,17 +3,18 @@
 Composes the ingest layer into one lazy plan per bank, unioned (G1)
 into the `result_all_banks` surface (B4 ordered projection):
 
-    statement_lines (A1 scan + A4 decode + A5 html, ONE binaryFile pass)
-      → parse_bank (A3 header detect + B1/B2 mapping + A2 filename meta)
+    statement_lines (A1 scan + A4 decode + A5 html + A3 per-file header
+                     position, ONE binaryFile pass)
+      → parse_banks (B1/B2 mapping + A2 filename meta)
       → B3 init missing canonical columns
       → extract_card_info (E2 ordered ffill + H8 + B11)
       → parse_bank_specific (H7 / H9 / bank defaults)
       → general_cleanse (H3, H2+B6, H4, H5, H1, H6)
       → unionByName (G1) → ordered projection (B4)
 
-Shuffle profile: the only wide operations are the per-file header-min
-aggregate (tiny) and E2's per-file window; everything else is
-narrow column expressions over the single file scan.
+Shuffle profile: the only wide operations are the per-bank header-line
+aggregate (≤|banks| rows, collected once) and E2's per-file window;
+everything else is narrow column expressions over the single file scan.
 """
 
 from __future__ import annotations
@@ -49,21 +50,10 @@ def run_etl(
     """Directory of raw statements → unified canonical fact
     (`result_all_banks` shape, 16 ordered columns)."""
     specs = specs if specs is not None else DEFAULT_BANK_SPECS
-    lines = statement_lines(spark, data_dir, specs)
-    # Each bank re-reads the line frame (header probe + data parse);
-    # materializing stops repeated binaryFile decode passes.  A
-    # localCheckpoint (not persist) also truncates the plan, so every
-    # branch gets EXACT size stats and the per-file header joins plan
-    # as broadcasts instead of stats-less sort-merges.  Statement
-    # corpora are small relative to cluster memory; spill is acceptable.
-    from ..functions import caching
-
-    lines = caching.track(lines.localCheckpoint(eager=True))
-
     frames: list[DataFrame] = []
-    # parse_banks: ONE driver action discovers every bank's header
-    # (r12; the per-bank probe loop serialized ~3 jobs per spec)
-    parsed_by_id = parse_banks(lines, specs)
+    # parse_banks persists the lines (every bank branch re-reads them)
+    # and discovers every bank's header in ONE driver action
+    parsed_by_id = parse_banks(statement_lines(spark, data_dir, specs), specs)
     for spec in specs:
         parsed = parsed_by_id.get(spec.bank_id)
         if parsed is None:

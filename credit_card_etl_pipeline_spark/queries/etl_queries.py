@@ -488,23 +488,11 @@ FROM (VALUES
 
 
 def _parsed_canonical_union(lines: DataFrame) -> DataFrame:
-    """parse_bank per spec → unionByName → stable canonical projection
-    (shared by the mapInPandas and Python-DataSource ingest oracles).
+    """parse_banks → unionByName → stable canonical projection (shared
+    by the mapInPandas, Python-DataSource and streaming ingest oracles).
 
-    The line frame is localCheckpointed first: every bank branch embeds
-    it ≥3× (header-position aggregate, header-row collect, data join),
-    so without materialization the Python decode re-runs ~12× across
-    the 4-bank union — the decode is the expensive pass, run it ONCE.
-    The checkpoint also gives exact size stats, so the per-file
-    header-position joins plan as broadcasts instead of stats-less
-    sort-merges (see BENCH_HISTORY r7: the broadcast-HINT variant was
-    slower precisely because it re-ran the un-checkpointed scan)."""
-    from ..functions import caching
-
-    lines = caching.track(lines.localCheckpoint(eager=True))
-    # parse_banks: header discovery for all banks in ONE driver action
-    # (r12 — the per-bank limit(1).collect() loop serialized ~3 jobs per
-    # spec on the driver; guide §1.2/§5)
+    parse_banks persists the line frame, so the Python decode runs
+    ONCE for the 4-bank union."""
     parts = list(parse_banks(lines, DEFAULT_BANK_SPECS).values())
     raw = parts[0]
     for p in parts[1:]:
@@ -774,5 +762,4 @@ def stream_ingest_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    landed = spark.table(name).localCheckpoint(eager=True)
-    return _parsed_canonical_union(landed)
+    return _parsed_canonical_union(spark.table(name))

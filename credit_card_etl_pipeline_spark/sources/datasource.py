@@ -6,14 +6,16 @@ feed is a first-class reader instead of a helper function::
     spark.dataSource.register(BankStatementDataSource)
     lines = (spark.read.format("bank_statement")
                   .option("path", "/data/statements")
-                  .load())          # → path, bank_id, pos, line
+                  .load())          # → path, bank_id, pos, line, hpos
 
 One :class:`InputPartition` per file — file-level parallelism across
-executors, identical decode/routing semantics to
-``sources.ingest.statement_lines`` (keyword routing, per-bank
-encodings, stdlib HTML table extraction).  The mapInPandas variant
-remains the default engine path; this reader is the pluggable-format
-surface (SURVEY §4's "Python Data Source for HTML statements").
+executors; each file goes through the same per-file decoder as
+``sources.ingest.statement_lines`` (``decode_statement``: keyword
+routing, per-bank encodings, stdlib HTML table extraction, header
+position), so both feeds share one schema (``LINES_DDL``).  The
+mapInPandas variant remains the default engine path; this reader is
+the pluggable-format surface (SURVEY §4's "Python Data Source for
+HTML statements").
 
 Options: ``path`` (directory, required).  Bank specs are the engine
 defaults; point ``specs_yaml`` at a banks_config.yaml to override.
@@ -31,9 +33,8 @@ _FILE_RE = re.compile(r"\.(csv|xlsx|xls|html)$", re.I)
 
 
 class _FilePartition(InputPartition):
-    def __init__(self, path: str, bank_id: str):
+    def __init__(self, path: str):
         self.path = path
-        self.bank_id = bank_id
 
 
 class BankStatementReader(DataSourceReader):
@@ -54,30 +55,25 @@ class BankStatementReader(DataSourceReader):
         from .ingest import route_bank
 
         specs = self._specs()
-        parts: list[InputPartition] = []
-        for name in sorted(os.listdir(self.data_dir)):
-            if name.startswith(".") or not _FILE_RE.search(name):
-                continue
-            spec = route_bank(name, specs)
-            if spec is not None:
-                parts.append(
-                    _FilePartition(os.path.join(self.data_dir, name), spec.bank_id)
-                )
-        return parts
+        return [
+            _FilePartition(os.path.join(self.data_dir, name))
+            for name in sorted(os.listdir(self.data_dir))
+            if not name.startswith(".")
+            and _FILE_RE.search(name)
+            and route_bank(name, specs) is not None
+        ]
 
     def read(self, partition: _FilePartition) -> Iterator[tuple]:
-        from .ingest import html_table_lines
+        from .ingest import decode_statement
 
-        specs = {s.bank_id: s for s in self._specs()}
-        spec = specs[partition.bank_id]
         with open(partition.path, "rb") as f:
-            text = f.read().decode(spec.encoding, errors="replace")
-        if spec.file_type == "html":
-            lines = html_table_lines(text, spec.header_keyword)
-        else:
-            lines = text.splitlines()
+            content = f.read()
+        # partitions() only lists routable files, so this never is None
+        spec, lines, hpos = decode_statement(
+            os.path.basename(partition.path), content, self._specs()
+        )
         for i, line in enumerate(lines):
-            yield (partition.path, spec.bank_id, i, line)
+            yield (partition.path, spec.bank_id, i, line, hpos)
 
 
 class BankStatementDataSource(DataSource):
@@ -86,7 +82,9 @@ class BankStatementDataSource(DataSource):
         return "bank_statement"
 
     def schema(self) -> str:
-        return "path string, bank_id string, pos bigint, line string"
+        from .ingest import LINES_DDL
+
+        return LINES_DDL
 
     def reader(self, schema) -> BankStatementReader:
         return BankStatementReader(self.options)

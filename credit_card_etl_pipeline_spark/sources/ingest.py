@@ -8,13 +8,15 @@ directory scan) in a Spark-native shape:
   routed to banks by filename keyword (A1, etl.py:453-459) and decoded
   (A4: utf-8 / cp950 / Big5, ``errors='replace'``) inside a single
   Arrow-batched ``mapInPandas``, yielding a distributed ``(path,
-  bank_id, pos, line)`` frame.  Line numbers are explicit — they carry
-  both header-skip (A3) and the order-dependent forward-fill (E2,
-  SURVEY §2.E) without relying on implicit row order.
-* **Header detection as a dataflow** (A3, etl.py:137-143): the header
-  row of each file is located by keyword scan over the first 50 lines
-  with a per-file aggregate, not a driver-side file read; data rows are
-  the lines after it, parsed with ``from_csv``.
+  bank_id, pos, line, hpos)`` frame (:data:`LINES_DDL`).  Line numbers
+  are explicit — they carry both header-skip (A3) and the
+  order-dependent forward-fill (E2, SURVEY §2.E) without relying on
+  implicit row order.
+* **Header detection per file** (A3, etl.py:137-143): while a file is
+  in memory, :func:`decode_statement` finds its header line — the first
+  of lines 0..50 containing the keyword, else line 0 — and every
+  line row carries that ``hpos``; data rows are the lines after it,
+  parsed with ``from_csv``.
 * **HTML statements** (A5, etl.py:290-304) are flattened to
   cell-separator lines by a stdlib-``HTMLParser`` table extractor inside
   the same decode step (BeautifulSoup/lxml are not required).
@@ -22,11 +24,12 @@ directory scan) in a Spark-native shape:
   gated behind an import-try — the workbook engines aren't part of the
   engine's hard dependencies.
 
-Scale design: per-file work parallelizes across executors; the only
-driver-side step is reading ONE header line per bank (a KB-sized
-``limit(1)`` collect) to compile the per-bank CSV schema.  Statement
-files are assumed layout-consistent per bank (the reference's per-bank
-``columns_mapping`` encodes the same assumption).
+Scale design: per-file work parallelizes across executors;
+:func:`parse_banks` persists the line frame and its one driver action
+collects one header line per bank (a ≤|banks|-row aggregate) to compile
+the per-bank CSV schema.  Statement files are assumed layout-consistent
+per bank (the reference's per-bank ``columns_mapping`` encodes the same
+assumption).
 """
 
 from __future__ import annotations
@@ -41,9 +44,9 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .. import schema as S
+from ..functions import caching
 
 #: Cell separator used to flatten HTML table rows into "lines".
 HTML_CELL_SEP = "\x1f"
@@ -208,23 +211,46 @@ def route_bank(filename: str, specs: list[BankSpec]) -> BankSpec | None:
     return None
 
 
-_LINES_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType()),
-        T.StructField("bank_id", T.StringType()),
-        T.StructField("pos", T.LongType()),
-        T.StructField("line", T.StringType()),
-    ]
-)
+#: Schema of the line frame shared by :func:`statement_lines` and the
+#: ``bank_statement`` data source: one row per decoded line, carrying
+#: its file's header position.
+LINES_DDL = "path string, bank_id string, pos bigint, line string, hpos bigint"
+
+
+def header_pos(lines: list[str], keyword: str | None) -> int:
+    """A3 (etl.py:137-149): index of the first line among lines 0..50
+    containing ``keyword``; no keyword, or no hit, falls back to 0."""
+    if keyword is None:
+        return 0
+    for i, line in enumerate(lines[:51]):
+        if keyword in line:
+            return i
+    return 0
+
+
+def decode_statement(
+    name: str, content: bytes, specs: list[BankSpec]
+) -> tuple[BankSpec, list[str], int] | None:
+    """A1+A4+A5+A3 for one file: route ``name`` to its bank, decode
+    ``content`` into lines (HTML flattened to its statement table) and
+    locate the header line.  Returns ``None`` for unroutable files."""
+    spec = route_bank(name, specs)
+    if spec is None:
+        return None
+    text = bytes(content).decode(spec.encoding, errors="replace")
+    if spec.file_type == "html":
+        lines = html_table_lines(text, spec.header_keyword)
+    else:
+        lines = text.splitlines()
+    return spec, lines, header_pos(lines, spec.header_keyword)
 
 
 def statement_lines(
     spark: SparkSession, data_dir: str, specs: list[BankSpec] | None = None
 ) -> DataFrame:
-    """A1+A4+A5: one distributed (path, bank_id, pos, line) frame over
-    every routable statement file under ``data_dir``."""
-    specs = specs if specs is not None else DEFAULT_BANK_SPECS
-    spec_list = list(specs)
+    """A1+A3+A4+A5: one distributed :data:`LINES_DDL` frame over every
+    routable statement file under ``data_dir``."""
+    spec_list = list(specs if specs is not None else DEFAULT_BANK_SPECS)
 
     files = (
         spark.read.format("binaryFile")
@@ -235,23 +261,21 @@ def statement_lines(
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out: list[tuple[str, str, int, str]] = []
+            out: list[tuple[str, str, int, str, int]] = []
             for path, content in zip(pdf["path"], pdf["content"]):
                 name = path.rsplit("/", 1)[-1]
-                spec = route_bank(name, spec_list)
-                if spec is None:
+                decoded = decode_statement(name, content, spec_list)
+                if decoded is None:
                     continue
-                text = bytes(content).decode(spec.encoding, errors="replace")
-                if spec.file_type == "html":
-                    lines = html_table_lines(text, spec.header_keyword)
-                else:
-                    lines = text.splitlines()
+                spec, lines, hpos = decoded
                 out.extend(
-                    (path, spec.bank_id, i, ln) for i, ln in enumerate(lines)
+                    (path, spec.bank_id, i, ln, hpos) for i, ln in enumerate(lines)
                 )
-            yield pd.DataFrame(out, columns=["path", "bank_id", "pos", "line"])
+            yield pd.DataFrame(
+                out, columns=["path", "bank_id", "pos", "line", "hpos"]
+            )
 
-    return files.mapInPandas(decode, _LINES_SCHEMA)
+    return files.mapInPandas(decode, LINES_DDL)
 
 
 def filename_meta(path_col: F.Column) -> dict[str, F.Column]:
@@ -276,26 +300,6 @@ def filename_meta(path_col: F.Column) -> dict[str, F.Column]:
     return {"base_year": base_year, "bill_month": bill_month}
 
 
-def _header_positions(lines: DataFrame, spec: BankSpec) -> DataFrame:
-    """A3: per-file header line position — first of the first 50 lines
-    containing the keyword; files without one fall back to line 0
-    (etl.py:137-149)."""
-    if spec.header_keyword is None:
-        return lines.select("path").distinct().withColumn("hpos", F.lit(0))
-    hits = lines.where(
-        (F.col("pos") <= 50) & F.col("line").contains(spec.header_keyword)
-    )
-    found = hits.groupBy("path").agg(F.min("pos").alias("hpos"))
-    # one row per FILE on both sides — broadcast keeps the join
-    # hash-based however the stats look (no per-path sort of anything)
-    return (
-        lines.select("path")
-        .distinct()
-        .join(F.broadcast(found), "path", "left")
-        .na.fill({"hpos": 0})
-    )
-
-
 def _split_header(header_line: str, sep: str) -> list[str]:
     if sep == HTML_CELL_SEP:
         cells = header_line.split(sep)
@@ -305,135 +309,48 @@ def _split_header(header_line: str, sep: str) -> list[str]:
     return [" ".join(str(c).split()) for c in cells]
 
 
-def _headers_and_positions(
-    lines: DataFrame, specs: list[BankSpec]
-) -> tuple[DataFrame, dict[str, str]]:
-    """A3 for EVERY bank at once: one distributed header-position pass
-    plus ONE driver action for the header lines.
-
-    The per-bank :func:`parse_bank` path pays one ``limit(1).collect()``
-    plus a header-position aggregate per spec — with AQE that is
-    several Spark jobs per bank, serialized on the driver (r12: the
-    4-spec union spent more wall time in driver round-trips than in
-    tasks; guide §1.2 fixed costs / §5 driver).  Here the per-file
-    header position (first keyword hit in the first 50 lines, else 0)
-    is ONE aggregate over all banks — eagerly materialized, so every
-    per-bank branch broadcast-joins the same tiny (path, hpos) table —
-    and the per-bank header lines come back in ONE ≤|banks|-row
-    collect.  The driver holds O(banks) strings; the per-file table
-    stays distributed (a 100 TB backfill can have millions of files).
-
-    The header line is taken from the lexicographically first file of
-    each bank (statement layouts are per-bank consistent — the same
-    assumption the per-bank ``limit(1)`` pick already relied on, made
-    deterministic here).  Banks with no files are absent from the map.
-    """
-    kw_items: list[F.Column] = []
-    for s in specs:
-        if s.header_keyword is not None:
-            kw_items += [F.lit(s.bank_id), F.lit(s.header_keyword)]
-    paths = lines.select("path", "bank_id").distinct()
-    if kw_items:
-        kw = F.create_map(*kw_items)[F.col("bank_id")]
-        found = (
-            lines.where(
-                (F.col("pos") <= 50) & F.col("line").contains(kw)
-            )
-            .groupBy("path")
-            .agg(F.min("pos").alias("hpos"))
-        )
-        hpos_all = paths.join(found, "path", "left").na.fill({"hpos": 0})
-    else:
-        hpos_all = paths.withColumn("hpos", F.lit(0))
-    # one row per FILE — eager checkpoint so the per-bank broadcast
-    # builds scan materialized blocks instead of re-aggregating
-    hpos_all = hpos_all.localCheckpoint(eager=True)
-    hdr_rows = (
-        lines.join(F.broadcast(hpos_all.select("path", "hpos")), "path")
-        .where(F.col("pos") == F.col("hpos"))
-        .groupBy("bank_id")
-        .agg(F.min_by("line", "path").alias("line"))
-        .collect()
-    )
-    return hpos_all, {r["bank_id"]: r["line"] for r in hdr_rows}
-
-
 def parse_banks(
     lines: DataFrame, specs: list[BankSpec] | None = None
 ) -> dict[str, DataFrame]:
-    """A3+B1+B2 for every bank with one shared header-position pass and
-    ONE driver action for all header discovery (see
-    :func:`_headers_and_positions`); ``lines`` should be materialized
-    (checkpointed/persisted) by the caller — both engine call sites
-    already do.  Returns ``{bank_id: parsed}`` for each bank that has
-    files, in spec order."""
+    """A3+B1+B2: parse a :data:`LINES_DDL` frame into canonical
+    columns, one frame per bank that has files, in spec order.
+
+    ``lines`` is persisted (tracked for release, caching.py) because
+    every bank branch re-reads it; the one driver action — the header
+    line of each bank, taken from its lexicographically first file —
+    also fills that cache.  Each parsed frame carries ``path`` and
+    ``pos`` (explicit ingest order for E2) plus ``base_year`` /
+    ``bill_month`` (A2) alongside the mapped canonical columns.
+    """
     specs = list(specs if specs is not None else DEFAULT_BANK_SPECS)
-    hpos_all, headers = _headers_and_positions(lines, specs)
+    lines = caching.track(lines.persist())
+    headers = {
+        r["bank_id"]: r["line"]
+        for r in lines.where(F.col("pos") == F.col("hpos"))
+        .groupBy("bank_id")
+        .agg(F.min_by("line", "path").alias("line"))
+        .collect()
+    }
     frames: dict[str, DataFrame] = {}
     for spec in specs:
         if spec.bank_id not in headers:
             continue
-        parsed = parse_bank(
-            lines, spec, precomputed=(headers[spec.bank_id], hpos_all)
+        raw_names = _split_header(
+            headers[spec.bank_id],
+            HTML_CELL_SEP if spec.file_type == "html" else ",",
         )
-        if parsed is not None:
-            frames[spec.bank_id] = parsed
+        frames[spec.bank_id] = _parse_bank_tail(
+            lines.where(F.col("bank_id") == spec.bank_id), spec, raw_names
+        )
     return frames
 
 
-def parse_bank(
-    lines: DataFrame, spec: BankSpec, *,
-    precomputed: tuple[str, DataFrame] | None = None,
-) -> DataFrame | None:
-    """A3+B1+B2+B3: parse one bank's lines into canonical columns.
-
-    Returns null if the bank has no files.  Output carries ``path`` and
-    ``pos`` (explicit ingest order for E2) plus ``base_year`` /
-    ``bill_month`` (A2) alongside the mapped canonical columns.
-
-    ``precomputed`` is ``(header_line, hpos_all)`` from
-    :func:`_headers_and_positions` — multi-bank callers use
-    :func:`parse_banks` so header discovery costs one driver action for
-    the whole union instead of one per bank; standalone calls keep the
-    self-contained per-bank probe below.
-    """
-    bank_lines = lines.where(F.col("bank_id") == spec.bank_id)
-    if precomputed is not None:
-        header_line, hpos_all = precomputed
-        # the materialized all-banks (path, hpos) table: filter this
-        # bank's rows and broadcast — no extra aggregate per bank
-        hpos = hpos_all.where(
-            F.col("bank_id") == spec.bank_id
-        ).select("path", "hpos")
-        with_h = bank_lines.join(F.broadcast(hpos), "path")
-        raw_names = _split_header(
-            header_line, HTML_CELL_SEP if spec.file_type == "html" else ","
-        )
-        return _parse_bank_tail(with_h, spec, raw_names)
-    # hpos is ONE ROW PER FILE (path, header line no) — broadcast it so
-    # the fact side (every line of every file) is never sorted/shuffled
-    # by path: without the hint Spark picks SortMergeJoin here (sizes
-    # unknown behind the datasource scan), which at ingest scale means
-    # a full shuffle of the raw lines just to attach one int per file.
-    hpos = _header_positions(bank_lines, spec)
-    with_h = bank_lines.join(F.broadcast(hpos), "path")
-
-    header_row = (
-        with_h.where(F.col("pos") == F.col("hpos")).select("line").limit(1).collect()
-    )
-    if not header_row:
-        return None
-    sep = HTML_CELL_SEP if spec.file_type == "html" else ","
-    raw_names = _split_header(header_row[0]["line"], sep)
-    return _parse_bank_tail(with_h, spec, raw_names)
-
-
 def _parse_bank_tail(
-    with_h: DataFrame, spec: BankSpec, raw_names: list[str]
+    bank_lines: DataFrame, spec: BankSpec, raw_names: list[str]
 ) -> DataFrame:
-    """B1+B2 shared tail: data-row slice + per-column projection."""
+    """B1+B2: data-row slice + per-column projection of one bank."""
 
-    data = with_h.where(
+    data = bank_lines.where(
         (F.col("pos") > F.col("hpos")) & (F.trim(F.col("line")) != "")
     )
     if spec.file_type == "html":

@@ -32,7 +32,8 @@ def test_datasource_matches_mapinpandas_feed(spark, tmp_path):
 
     def key(rows):
         return sorted(
-            (r["path"].split("/")[-1], r["bank_id"], r["pos"], r["line"])
+            (r["path"].split("/")[-1], r["bank_id"], r["pos"], r["line"],
+             r["hpos"])
             for r in rows
         )
 

@@ -1,5 +1,7 @@
 """Ingest edge cases: malformed rows skipped, keyword-less files fall
-back to line 0, empty directories yield an empty canonical frame."""
+back to line 0, the header is found per file, empty directories yield
+an empty canonical frame, and run_etl leaves no persisted RDD behind
+once tracked frames are released."""
 
 from __future__ import annotations
 
@@ -7,6 +9,7 @@ import pytest
 
 from credit_card_etl_pipeline_spark import schema as S
 from credit_card_etl_pipeline_spark.plans.etl import run_etl
+from credit_card_etl_pipeline_spark.sources.ingest import header_pos
 
 BAD_ROWS_CSV = """交易日期,入帳日期,卡號末四碼,交易說明,外幣金額,臺幣金額
 01/10,01/11,,正常商店,,100
@@ -39,6 +42,59 @@ def test_headerless_fallback_uses_first_line(spark, tmp_path):
     # header fell back to line 0; 日期X is unmapped so Transaction_Date
     # is never populated → row dropped by the null-date filter (B6)
     assert rows == []
+
+
+def test_header_pos_scans_lines_0_to_50():
+    # A3 (etl.py:137-149): the first keyword hit among lines 0..50;
+    # past that, no keyword, or no keyword configured -> line 0
+    def lines(at):
+        return [f"preamble {i}" for i in range(at)] + ["交易日期,金額"]
+
+    assert header_pos(lines(50), "交易日期") == 50
+    assert header_pos(lines(51), "交易日期") == 0
+    assert header_pos(lines(3) + lines(7), "交易日期") == 3
+    assert header_pos(["a,b", "c,d"], "交易日期") == 0
+    assert header_pos(lines(5), None) == 0
+    assert header_pos([], "交易日期") == 0
+
+
+ESUN_DATA = """01/10,01/11,,全聯福利中心,,"1,234"
+01/12,01/13,,星巴克咖啡,,200
+"""
+
+
+def test_header_found_per_file_across_preamble_lengths(spark, tmp_path):
+    # two statements of one bank: the header on line 0 in one, behind a
+    # preamble in the other whose date-like summary row must not parse
+    # as a transaction — each file's own header position decides
+    header = "交易日期,入帳日期,卡號末四碼,交易說明,外幣金額,臺幣金額\n"
+    preamble = "帳單摘要,,,,,\n01/05,01/06,,上期應繳金額,,3000\n"
+    d = tmp_path / "s4"
+    d.mkdir()
+    (d / "玉山_202401_a.csv").write_text(header + ESUN_DATA, encoding="utf-8")
+    (d / "玉山_202401_b.csv").write_text(
+        preamble + header + ESUN_DATA, encoding="utf-8"
+    )
+    rows = run_etl(spark, str(d)).collect()
+    parsed = sorted(tuple(r) for r in rows)
+    assert len(parsed) == 4
+    assert parsed[0::2] == parsed[1::2]  # both files, identical rows
+    assert {r[S.MERCHANT] for r in rows} == {"全聯福利中心", "星巴克咖啡"}
+    assert {r[S.AMOUNT] for r in rows} == {1234.0, 200.0}
+
+
+def test_run_etl_leaves_no_persisted_rdd_after_release(spark, tmp_path):
+    from credit_card_etl_pipeline_spark.functions import caching
+
+    d = tmp_path / "s5"
+    d.mkdir()
+    (d / "玉山_202401.csv").write_text(BAD_ROWS_CSV, encoding="utf-8")
+    jsc = spark.sparkContext._jsc
+    caching.release_tracked()
+    before = set(jsc.getPersistentRDDs().keys())
+    assert len(run_etl(spark, str(d)).collect()) == 2
+    caching.release_tracked()
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
 
 
 def test_excel_statement_path(spark, monkeypatch, tmp_path):

@@ -653,13 +653,13 @@ def test_top_smj_queries_join_strategy_pinned(spark):
     from credit_card_etl_pipeline_spark import queries as q
 
     expected = {
-        # header-position joins: one row per FILE, broadcast by
-        # construction (sources/ingest.py) — never a fact-side sort.
-        # r12 INTENTIONAL change: per-bank header discovery fused into
-        # ONE checkpointed (path, hpos) aggregate (sources/ingest.py
-        # _headers_and_positions), so the 4 banks share one broadcast
-        # build each instead of two (8 -> 4).
-        "ingest_via_datasource": (0, 4),
+        # INTENTIONAL change (4 -> 0): the per-file header position is
+        # found by the decoder (sources/ingest.py decode_statement) and
+        # rides on each line row as ``hpos``, so no join attaches it —
+        # there is no broadcast left to pin, and a join reappearing
+        # here means a per-file table is being joined back onto the
+        # lines again.
+        "ingest_via_datasource": (0, 0),
         # LSH-bucket / containment self-joins: both sides are the doc
         # corpus — SMJ is the only shape that survives 100 TB.
         # r11 INTENTIONAL change (substring_containment checkpoint +
