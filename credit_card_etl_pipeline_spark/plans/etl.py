@@ -1,20 +1,30 @@
 """The extract pipeline (reference: etl.py Part 3/4, lines 259-503).
 
 Composes the ingest layer into one lazy plan per bank, unioned (G1)
-into the `result_all_banks` surface (B4 ordered projection):
+and cleansed once into the `result_all_banks` surface (B4 ordered
+projection):
 
     statement_lines (A1 scan + A4 decode + A5 html + A3 per-file header
-                     position, ONE binaryFile pass)
+                     position, ONE binaryFile pass, one decode task
+                     per core)
       → parse_banks (B1/B2 mapping + A2 filename meta)
-      → B3 init missing canonical columns
-      → extract_card_info (E2 ordered ffill + H8 + B11)
-      → parse_bank_specific (H7 / H9 / bank defaults)
-      → general_cleanse (H3, H2+B6, H4, H5, H1, H6)
-      → unionByName (G1) → ordered projection (B4)
+      → per bank: B3 init missing canonical columns
+                  → extract_card_info (E2 ordered ffill + H8 + B11)
+                  → parse_bank_specific (H7 / H9 / bank defaults)
+      → unionByName (G1)
+      → general_cleanse (H3, H2+B6, H4, H5, H1, H6), once
+      → ordered projection (B4)
+
+The cleanse is row-wise and never reads the bank id, so it is built and
+analysed once over the union; Catalyst pushes its projections and the
+B6 filter into every branch, so the executed plan is the same as one
+cleanse per bank.
 
 Shuffle profile: the only wide operations are the per-bank header-line
 aggregate (≤|banks| rows, collected once) and E2's per-file window;
-everything else is narrow column expressions over the single file scan.
+everything else is narrow column expressions over the single file scan,
+whose partitions are merged (``coalesce``, no shuffle) to at most one
+per core before the decode.
 """
 
 from __future__ import annotations
@@ -61,13 +71,11 @@ def run_etl(
         df = _init_missing(parsed)
         df = extract_card_info(df, spec.bank_id)
         df = parse_bank_specific(df, spec.bank_id)
-        df = general_cleanse(df)
-        frames.append(df.select(*S.ETL_OUTPUT_COLUMNS))
+        frames.append(df.select(*S.ETL_OUTPUT_COLUMNS, "base_year", "bill_month"))
 
     if not frames:
         return spark.createDataFrame([], schema=S.CANONICAL_SCHEMA).select(
             *S.ETL_OUTPUT_COLUMNS
         )
-    return reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
-    )
+    union = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+    return general_cleanse(union).select(*S.ETL_OUTPUT_COLUMNS)

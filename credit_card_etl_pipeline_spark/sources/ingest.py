@@ -24,11 +24,17 @@ directory scan) in a Spark-native shape:
   gated behind an import-try — the workbook engines aren't part of the
   engine's hard dependencies.
 
-Scale design: per-file work parallelizes across executors;
-:func:`parse_banks` persists the line frame and its one driver action
-collects one header line per bank (a ≤|banks|-row aggregate) to compile
-the per-bank CSV schema.  Statement files are assumed layout-consistent
-per bank (the reference's per-bank ``columns_mapping`` encodes the same
+Scale design: per-file work parallelizes across cores, in one decode
+task per core: the scan's partitions are merged with ``coalesce`` (no
+shuffle) to ``defaultParallelism`` before the ``mapInPandas``, because
+each Python task has a fixed start-up cost that many small files would
+otherwise pay once per scan partition (SCALE.md, "Python task cost").
+Every line row carries its ``path``, ``pos`` and ``hpos``, so merging
+files into one task changes no row.  :func:`parse_banks` persists the
+line frame and its one driver action collects one header line per bank
+(a ≤|banks|-row aggregate; blank lines never qualify) to compile the
+per-bank CSV schema.  Statement files are assumed layout-consistent per
+bank (the reference's per-bank ``columns_mapping`` encodes the same
 assumption).
 """
 
@@ -257,6 +263,9 @@ def statement_lines(
         .option("pathGlobFilter", "*.{csv,html,xls,xlsx}")
         .load(data_dir)
         .select("path", "content")
+        # one decode task per core: each Python task has a fixed cost,
+        # and coalesce only merges partitions (no shuffle)
+        .coalesce(spark.sparkContext.defaultParallelism)
     )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -317,8 +326,8 @@ def parse_banks(
 
     ``lines`` is persisted (tracked for release, caching.py) because
     every bank branch re-reads it; the one driver action — the header
-    line of each bank, taken from its lexicographically first file —
-    also fills that cache.  Each parsed frame carries ``path`` and
+    line of each bank, taken from its lexicographically first file
+    whose header line is not blank — also fills that cache.  Each parsed frame carries ``path`` and
     ``pos`` (explicit ingest order for E2) plus ``base_year`` /
     ``bill_month`` (A2) alongside the mapped canonical columns.
     """
@@ -326,7 +335,11 @@ def parse_banks(
     lines = caching.track(lines.persist())
     headers = {
         r["bank_id"]: r["line"]
-        for r in lines.where(F.col("pos") == F.col("hpos"))
+        # a blank line cannot be a header (a keyword-less file falls
+        # back to line 0, which may be empty)
+        for r in lines.where(
+            (F.col("pos") == F.col("hpos")) & (F.trim(F.col("line")) != "")
+        )
         .groupBy("bank_id")
         .agg(F.min_by("line", "path").alias("line"))
         .collect()

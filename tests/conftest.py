@@ -1,13 +1,20 @@
 """Shared test fixtures: one session-scoped SparkSession (local, small
 shuffle parallelism) and a DuckDB connection with the testdata tables
-registered, mirroring the driver's oracle harness."""
+registered, mirroring the driver's oracle harness.  Also implements the
+``timeout`` mark (pytest-timeout is not a dependency)."""
 
 from __future__ import annotations
 
+import contextlib
+import faulthandler
 import os
+import signal
+import tempfile
+from collections.abc import Iterator
 
 import duckdb
 import pytest
+from pyspark.sql import SparkSession
 
 from credit_card_etl_pipeline_spark.session import get_spark
 
@@ -25,6 +32,50 @@ TABLES = [
     "documents",
     "embeddings",
 ]
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "timeout(seconds): fail the test when its call runs longer than"
+        " `seconds` (SIGALRM deadline; unmarked tests get none)",
+    )
+
+
+@contextlib.contextmanager
+def deadline(seconds: float) -> Iterator[None]:
+    """Fail the enclosed block once ``seconds`` have passed: stop every
+    active streaming query (so a hung one cannot outlive the test) and
+    raise ``pytest.fail`` with a traceback of every thread."""
+
+    def expire(signum, frame):
+        with tempfile.TemporaryFile("w+") as f:
+            faulthandler.dump_traceback(file=f)
+            f.seek(0)
+            stacks = f.read()
+        spark = SparkSession.getActiveSession()
+        with contextlib.suppress(Exception):  # a dead JVM must not hide the timeout
+            for q in spark.streams.active if spark is not None else []:
+                q.stop()
+        pytest.fail(f"timed out after {seconds}s\n{stacks}", pytrace=False)
+
+    previous = signal.signal(signal.SIGALRM, expire)
+    signal.setitimer(signal.ITIMER_REAL, seconds)
+    try:
+        yield
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, previous)
+
+
+@pytest.hookimpl(hookwrapper=True)
+def pytest_runtest_call(item):
+    mark = item.get_closest_marker("timeout")
+    if mark is None:
+        yield
+        return
+    with deadline(mark.args[0]):
+        yield
 
 
 @pytest.fixture(scope="session")

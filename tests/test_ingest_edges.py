@@ -1,7 +1,8 @@
 """Ingest edge cases: malformed rows skipped, keyword-less files fall
-back to line 0, the header is found per file, empty directories yield
-an empty canonical frame, and run_etl leaves no persisted RDD behind
-once tracked frames are released."""
+back to line 0, a blank line never becomes a bank's header, the header
+is found per file, many files decode in one task per core, empty
+directories yield an empty canonical frame, and run_etl leaves no
+persisted RDD behind once tracked frames are released."""
 
 from __future__ import annotations
 
@@ -9,7 +10,8 @@ import pytest
 
 from credit_card_etl_pipeline_spark import schema as S
 from credit_card_etl_pipeline_spark.plans.etl import run_etl
-from credit_card_etl_pipeline_spark.sources.ingest import header_pos
+from credit_card_etl_pipeline_spark.sources.ingest import header_pos, statement_lines
+from tests.test_etl import CTBC_CSV, ESUN_CSV
 
 BAD_ROWS_CSV = """交易日期,入帳日期,卡號末四碼,交易說明,外幣金額,臺幣金額
 01/10,01/11,,正常商店,,100
@@ -42,6 +44,19 @@ def test_headerless_fallback_uses_first_line(spark, tmp_path):
     # header fell back to line 0; 日期X is unmapped so Transaction_Date
     # is never populated → row dropped by the null-date filter (B6)
     assert rows == []
+
+
+def test_blank_first_line_is_not_a_bank_header(spark, tmp_path):
+    # a keyword-less file with a blank line 0 sorts first among the
+    # bank's files; its header must come from the other file instead of
+    # failing the whole batch on an empty header line
+    d = tmp_path / "s6"
+    d.mkdir()
+    (d / "玉山_202401_a.csv").write_text(
+        "\n01/10,01/11,,全聯福利中心,,100\n", encoding="utf-8"
+    )
+    (d / "玉山銀行113年1月.csv").write_text(ESUN_CSV, encoding="utf-8")
+    assert len(run_etl(spark, str(d)).collect()) == 5
 
 
 def test_header_pos_scans_lines_0_to_50():
@@ -81,6 +96,36 @@ def test_header_found_per_file_across_preamble_lengths(spark, tmp_path):
     assert parsed[0::2] == parsed[1::2]  # both files, identical rows
     assert {r[S.MERCHANT] for r in rows} == {"全聯福利中心", "星巴克咖啡"}
     assert {r[S.AMOUNT] for r in rows} == {1234.0, 200.0}
+
+
+def test_many_files_decode_in_one_task_per_core(spark, tmp_path):
+    # 40 files per core make more scan partitions than cores; the decode
+    # runs in at most one task per core, and E2's per-file forward-fill
+    # still sees each file's own card header row
+    cores = spark.sparkContext.defaultParallelism
+    d = tmp_path / "s7"
+    d.mkdir()
+    for i in range(40 * cores):
+        (d / f"玉山銀行113年1月_{i:03d}.csv").write_text(ESUN_CSV, encoding="utf-8")
+    assert statement_lines(spark, str(d)).rdd.getNumPartitions() <= cores
+    rows = run_etl(spark, str(d)).collect()
+    assert len(rows) == 4 * 40 * cores
+    assert sum(r[S.CARD_NO] == "1234" for r in rows) == 3 * 40 * cores
+
+
+def test_general_cleanse_runs_once_over_the_bank_union(spark, tmp_path, monkeypatch):
+    from credit_card_etl_pipeline_spark.plans import etl
+
+    d = tmp_path / "s8"
+    d.mkdir()
+    (d / "玉山銀行113年1月.csv").write_text(ESUN_CSV, encoding="utf-8")
+    (d / "中信_202403.csv").write_bytes(CTBC_CSV.encode("cp950"))
+    calls = []
+    cleanse = etl.general_cleanse
+    monkeypatch.setattr(etl, "general_cleanse", lambda df: calls.append(1) or cleanse(df))
+    rows = run_etl(spark, str(d)).collect()
+    assert len(calls) == 1
+    assert {r[S.BANK_NAME] for r in rows} == {"esun_bank", "ctbc_bank"}
 
 
 def test_run_etl_leaves_no_persisted_rdd_after_release(spark, tmp_path):
